@@ -16,7 +16,7 @@ semantics only) as a partition-parallel Spark engine:
 - ``streaming``  — incremental index maintenance (foreachBatch upgrade path)
 
 Everything is public-API PySpark: DataFrames, Arrow-vectorized pandas UDFs,
-``applyInPandas``/``mapInPandas``, Window functions, AQE. No per-row Python UDFs.
+``applyInPandas``/``mapInPandas``/``applyInArrow``, Window functions, AQE. No per-row Python UDFs.
 """
 
 __version__ = "0.1.0"

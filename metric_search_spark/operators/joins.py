@@ -13,14 +13,16 @@ stage 1 (coarse prune, relational): both sides are encoded to Morton quadkey
     salted** (north rule): their probes split across ⌈n/threshold⌉ salt
     buckets and the halo fans out to each bucket; AQE is the safety net.
 
-stage 2 (fine refinement, Arrow kernel): per (cell, salt) group an
-    ``applyInPandas`` kernel computes each probe's exact top-k — either a
-    vectorized all-pairs numpy kernel ("flat") or a per-cell cover tree with
-    the reference's triangle-inequality pruning ("covertree",
-    core/covertree.py). Because a probe lives in exactly one group, the
-    kernel's ranked output IS the final answer — no global window shuffle on
-    this path (the reference's bounded sorted kNN list, tree.cpp:664-677,
-    lives inside the kernel).
+stage 2 (fine refinement, Arrow kernel): per (cell, salt) group one
+    ``cogroup().applyInArrow`` kernel (``_cogroup_kernel``) reads both sides'
+    records as numpy views over the Arrow buffers, runs a selection step —
+    vectorized all-pairs top-k (``_topk``) or a radius mask (``_within``) —
+    and builds its output from flat values plus an offsets array, with no
+    pandas and no per-probe Python. Because a probe lives in exactly one
+    group, the ranked top-k output IS the final answer — no global window
+    shuffle on this path (the reference's bounded sorted kNN list,
+    tree.cpp:664-677, lives inside the kernel), and the kernel also computes
+    each probe's ring-1 exactness verdict.
 
 Exactness across cell boundaries (the correctness crux the single-tree
 reference never faced): a probe's result is provably exact when its kth
@@ -41,12 +43,13 @@ the cogroup's sort handles |cells|·ring² + |cells| rows (thousands), not
 |build|·ring² + |probes| records (tens of millions); byte volume is
 unchanged but row-handling, sort comparisons, and Arrow per-row overhead
 shrink by the ~rows-per-cell factor (~256×). The kernel returns per-probe
-ranked arrays; the ring-guarantee verdict reads them narrowly and the
-row-per-rank form is a JVM-side posexplode. Shuffle bytes are
-|build|·ring² + |probes| + k·|probes| — never |build|×|probes|; per-group
-memory is bounded by the resolution's rows-per-cell target (and probe
-salting); no driver-side collect of data rows. The flagship plan at ring 1
-resolves ~all probes when resolution targets ~256 rows/cell.
+ranked arrays with the ring verdict alongside; the verdict is a filter over
+the persisted result and the row-per-rank form is a JVM-side posexplode.
+Shuffle bytes are |build|·ring² + |probes| + k·|probes| — never
+|build|×|probes|; per-group memory is bounded by the resolution's
+rows-per-cell target (and probe salting); no driver-side collect of data
+rows. The flagship plan at ring 1 resolves ~all probes when resolution
+targets ~256 rows/cell.
 
 res=0 tier (high-dim metrics the projection can't prune, or tiny builds):
 exact brute force as a bounded P×B block grid (``_grid_knn``) — per-task
@@ -59,19 +62,34 @@ path).
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass, field
+from typing import Callable
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DataType,
+    DoubleType,
+    StructField,
+    StructType,
+)
 
-from metric_search_spark.cells import cell_size
-from metric_search_spark.core.covertree import CoverTree
+from metric_search_spark.cells import cell_size, ring_guarantee_radius
 from metric_search_spark.core.metrics import Metric, get_metric
 from metric_search_spark.functions.spatial import cell_from_xy_col, kring_cells_col
 
 __all__ = ["knn_join", "range_join", "asof_join", "KnnJoinStats"]
+
+# upper clamp of a normalized coordinate: [0, 1) at 31-bit cell precision
+_COORD_HI = 1.0 - 2.0**-31
 
 
 @dataclass
@@ -103,24 +121,6 @@ def _pick_resolution(n_build: int, target_per_cell: int) -> int:
     if n_build <= target_per_cell:
         return 0
     return max(0, min(20, round(math.log(n_build / target_per_cell, 4.0))))
-
-
-def _as_matrix_col(series) -> np.ndarray:
-    vals = series.to_numpy()
-    if len(vals) and isinstance(vals[0], np.ndarray):
-        return np.vstack(vals).astype(np.float64, copy=False)
-    return np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in vals], dtype=np.float64
-    )
-
-
-def _group_matrix(pdf) -> np.ndarray:
-    """Record matrix for one cogroup side: _vec if shipped, else (x, y)."""
-    if "_vec" in pdf.columns:
-        return _as_matrix_col(pdf["_vec"])
-    return np.column_stack(
-        (pdf["_x"].to_numpy(np.float64), pdf["_y"].to_numpy(np.float64))
-    )
 
 
 def _flat_topk(
@@ -161,29 +161,162 @@ def _flat_topk(
     return all_idx, all_d
 
 
-def _covertree_topk(
-    metric: Metric, P: np.ndarray, B: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-group top-k via a local cover tree with the reference's pruning
-    (exact 'safe' bound — core/covertree.py)."""
-    tree = CoverTree(metric)
-    tree.insert_batch(list(B))
-    kk = min(k, B.shape[0])
-    idx = np.empty((P.shape[0], kk), dtype=np.int64)
-    d = np.empty((P.shape[0], kk), dtype=np.float64)
-    for i in range(P.shape[0]):
-        res = tree.knn(P[i], k=kk, prune="safe")
-        # node handle == insertion position == build row position
-        idx[i] = [n for n, _ in res]
-        d[i] = [dd for _, dd in res]
-    return idx, d
+# selection step: (probe matrix, build matrix, build ids) -> (probe index,
+# build index, dist) triples in probe-major, rank order
+Select = Callable[[np.ndarray, np.ndarray, pa.Array], tuple]
+
+
+def _topk(metric: Metric, k: int) -> Select:
+    """Each probe's k nearest, ties by build id (the join contract's
+    (dist, id) order): build rows are stably sorted by id first."""
+
+    def select(P, B, bids):
+        order = pc.sort_indices(bids).to_numpy()
+        idx, d = _flat_topk(metric, P, B[order], k)
+        return np.repeat(np.arange(len(P)), idx.shape[1]), order[idx.ravel()], d.ravel()
+
+    return select
+
+
+def _within(metric: Metric, radius: float, inclusive: bool) -> Select:
+    """Every build record at d < radius (the reference rnn's strict <,
+    tree.cpp:718), or d ≤ radius when inclusive."""
+
+    def select(P, B, bids):
+        D = metric.cross(P, B)
+        pi, bi = np.nonzero((D <= radius) if inclusive else (D < radius))
+        return pi, bi, D[pi, bi]
+
+    return select
+
+
+def _records(side: pa.Table) -> pa.StructArray:
+    """One cogroup side's records as a struct array: a packed side (one
+    ``_recs`` list per cell, see _pack) is flattened, plain rows are zipped
+    — views over the Arrow buffers either way."""
+    if "_recs" in side.column_names:
+        return pc.list_flatten(side.column("_recs").combine_chunks())
+    return side.to_struct_array().combine_chunks()
+
+
+def _matrix(recs: pa.StructArray) -> np.ndarray:
+    """Record matrix for the metric: _vec if shipped, else (x, y)."""
+    if recs.type.get_field_index("_vec") >= 0:
+        vecs = recs.field("_vec")
+        flat = pc.list_flatten(vecs).to_numpy(zero_copy_only=False)
+        return flat.reshape(len(vecs), -1)
+    return np.column_stack(
+        (
+            recs.field("_x").to_numpy(zero_copy_only=False),
+            recs.field("_y").to_numpy(zero_copy_only=False),
+        )
+    )
+
+
+def _cogroup_kernel(
+    probes: DataFrame,
+    build: DataFrame,
+    select: Select,
+    qid_type: DataType,
+    bid_type: DataType,
+    *,
+    ranked: bool,
+    verdict: tuple[int, float, int] | None = None,
+) -> DataFrame:
+    """The one join kernel: probes × build cogrouped by (cell, salt), each
+    side packed or plain rows, exchanged with the Python worker as Arrow.
+
+    ``ranked`` emits ONE ROW PER PROBE with its ranked ``_nids``/``_dists``
+    arrays, built from the selection's flat values plus an offsets array;
+    otherwise one (query_id, neighbor_id, dist) row per selected pair.
+    ``verdict = (res, coord_scale, need)`` adds the ring-1 flag ``_ok``: at
+    least ``need`` neighbors and a kth distance below the ring guarantee
+    radius of the clamped probe coordinates × coord_scale. A probe whose
+    halo holds no build rows still gets a row (empty arrays, ``_ok``
+    false), so it escalates instead of vanishing."""
+    if ranked:
+        fields = [
+            StructField("query_id", qid_type),
+            StructField("_nids", ArrayType(bid_type)),
+            StructField("_dists", ArrayType(DoubleType())),
+        ]
+        if verdict is not None:
+            fields.append(StructField("_ok", BooleanType()))
+    else:
+        fields = [
+            StructField("query_id", qid_type),
+            StructField("neighbor_id", bid_type),
+            StructField("dist", DoubleType()),
+        ]
+    schema = StructType(fields)
+    # the worker demands these exact Arrow types (ids may arrive as
+    # large_string, lists with another field name): the output is cast
+    arrow_schema = to_arrow_schema(schema)
+    bid_arrow = to_arrow_type(bid_type)
+
+    def fn(probe_tbl: pa.Table, build_tbl: pa.Table) -> pa.Table:
+        if probe_tbl.num_rows == 0 or (build_tbl.num_rows == 0 and not ranked):
+            return arrow_schema.empty_table()
+        probe = _records(probe_tbl)
+        pids = probe.field("_id")
+        if build_tbl.num_rows:
+            build = _records(build_tbl)
+            bids = build.field("_id")
+            pi, bi, d = select(_matrix(probe), _matrix(build), bids)
+            nids = bids.take(bi)
+        else:
+            pi, d, nids = np.empty(0, np.int64), np.empty(0), pa.array([], bid_arrow)
+        if not ranked:
+            cols = [pids.take(pi), nids, pa.array(d)]
+        else:
+            counts = np.bincount(pi, minlength=len(pids))
+            ends = np.cumsum(counts)
+            offsets = pa.array(np.concatenate(([0], ends)).astype(np.int32))
+            cols = [
+                pids,
+                pa.ListArray.from_arrays(offsets, nids),
+                pa.ListArray.from_arrays(offsets, pa.array(d)),
+            ]
+            if verdict is not None:
+                res, coord_scale, need = verdict
+                x = np.clip(probe.field("_x").to_numpy(zero_copy_only=False), 0.0, _COORD_HI)
+                y = np.clip(probe.field("_y").to_numpy(zero_copy_only=False), 0.0, _COORD_HI)
+                guar = ring_guarantee_radius(x, y, res, 1) * coord_scale
+                kth = np.full(len(pids), np.inf)
+                kth[counts > 0] = d[ends[counts > 0] - 1]
+                cols.append(pa.array((counts >= need) & (kth < guar)))
+        return pa.Table.from_arrays(cols, names=arrow_schema.names).cast(arrow_schema)
+
+    return (
+        probes.groupBy("_cell", "_salt")
+        .cogroup(build.groupBy("_cell", "_salt"))
+        .applyInArrow(fn, schema=schema)
+    )
 
 
 def _clamp01(c: Column) -> Column:
     """Clamp into [0, 1): cell assignment quantize-clips the same way, and the
     ring guarantee treats grid borders as fully covered — both must use the
     same clamped coordinate."""
-    return F.least(F.greatest(c.cast("double"), F.lit(0.0)), F.lit(1.0 - 2.0**-31))
+    return F.least(F.greatest(c.cast("double"), F.lit(0.0)), F.lit(_COORD_HI))
+
+
+# The two Morton expressions below take hundreds of py4j round trips to
+# build — about half a second per knn_join call on a 4-core host, a tenth of
+# the call. A Column is an immutable, session-independent expression, so
+# each is built once per process and shared.
+
+
+@functools.lru_cache(maxsize=64)
+def _cell_col(x_col: str, y_col: str, res: int) -> Column:
+    """Cell of the clamped (x_col, y_col) at resolution res."""
+    return cell_from_xy_col(_clamp01(F.col(x_col)), _clamp01(F.col(y_col)), res)
+
+
+@functools.lru_cache(maxsize=64)
+def _kring_col(res: int, ring_k: int) -> Column:
+    """The cells of ``_cell``'s ring_k ring, as an array to explode."""
+    return kring_cells_col(F.col("_cell"), res, ring_k)
 
 
 def _prepare(
@@ -198,8 +331,7 @@ def _prepare(
     cols += [
         F.col(x_col).cast("double").alias("_x"),
         F.col(y_col).cast("double").alias("_y"),
-        cell_from_xy_col(_clamp01(F.col(x_col)), _clamp01(F.col(y_col))
-                         , res).alias("_cell"),
+        _cell_col(x_col, y_col, res).alias("_cell"),
     ]
     return df.select(*cols)
 
@@ -237,10 +369,10 @@ def _with_salt(side_c: DataFrame, salts: DataFrame) -> DataFrame:
     )
 
 
-def _pack_cells(side_c: DataFrame) -> DataFrame:
-    """Collapse a prepared side to ONE row per cell with columnar arrays of
-    its records (ids, coords, optional vectors) — all JVM-side expression
-    work (collect_list + transform).
+def _pack(side: DataFrame, *keys: str) -> DataFrame:
+    """Collapse a prepared side to ONE row per group key whose records ride
+    in one ``_recs`` list<struct> column — a JVM-side collect_list that the
+    kernel reads back as flat Arrow buffers (_records).
 
     Why: the halo replicates the build side to its ring (×9 at ring 1, more
     for range joins). Replicating *packed cells* instead of raw rows cuts the
@@ -249,25 +381,8 @@ def _pack_cells(side_c: DataFrame) -> DataFrame:
     millions of tiny rows, not the numpy kernel, was the dominant cost of the
     fast path (r2 event-log profile). Byte volume is unchanged; row-handling
     and sort comparisons shrink by the pack factor."""
-    has_vec = "_vec" in side_c.columns
-    rec = F.struct(
-        *(["_id", "_vec", "_x", "_y"] if has_vec else ["_id", "_x", "_y"])
-    )
-    packed = side_c.groupBy("_cell").agg(F.collect_list(rec).alias("_recs"))
-    cols = [
-        "_cell",
-        F.transform("_recs", lambda r: r["_id"]).alias("_ids"),
-        F.transform("_recs", lambda r: r["_x"]).alias("_xs"),
-        F.transform("_recs", lambda r: r["_y"]).alias("_ys"),
-    ]
-    if has_vec:
-        # FLATTENED (list<double>), not list<list<double>>: pyarrow 16
-        # segfaults converting nested list-of-list cogroup batches to pandas
-        # (worker crash in arrow_to_pandas); the kernel reshapes by |ids|
-        cols.append(
-            F.flatten(F.transform("_recs", lambda r: r["_vec"])).alias("_vecs")
-        )
-    return packed.select(*cols)
+    rec = F.struct(*_payload_cols(side))
+    return side.groupBy(*keys).agg(F.collect_list(rec).alias("_recs"))
 
 
 def _halo_build_packed(
@@ -275,122 +390,16 @@ def _halo_build_packed(
 ) -> DataFrame:
     """Packed-cell halo: pack first, then replicate each cell row to its
     k-ring and fan out across the target cell's probe salt buckets."""
-    packed = _pack_cells(build_c)
-    payload = [c for c in ("_ids", "_xs", "_ys", "_vecs") if c in packed.columns]
-    exploded = packed.select(
-        *payload,
-        F.explode(kring_cells_col(F.col("_cell"), res, ring_k)).alias("_cell"),
+    exploded = _pack(build_c, "_cell").select(
+        "_recs",
+        F.explode(_kring_col(res, ring_k)).alias("_cell"),
     )
     return exploded.join(F.broadcast(salts), "_cell", "left").select(
-        *payload,
+        "_recs",
         "_cell",
         F.explode(
             F.sequence(F.lit(0), F.coalesce(F.col("n_salt"), F.lit(1)) - 1)
         ).alias("_salt"),
-    )
-
-
-def _pack_probes(probes_s: DataFrame) -> DataFrame:
-    """Collapse the salted probe side to one row per (cell, salt) group with
-    columnar record arrays — same rationale as _pack_cells: the cogroup then
-    sorts thousands of packed rows, not millions of probe rows."""
-    has_vec = "_vec" in probes_s.columns
-    rec = F.struct(
-        *(["_id", "_vec", "_x", "_y"] if has_vec else ["_id", "_x", "_y"])
-    )
-    packed = probes_s.groupBy("_cell", "_salt").agg(F.collect_list(rec).alias("_recs"))
-    cols = [
-        "_cell",
-        "_salt",
-        F.transform("_recs", lambda r: r["_id"]).alias("_pids"),
-        F.transform("_recs", lambda r: r["_x"]).alias("_pxs"),
-        F.transform("_recs", lambda r: r["_y"]).alias("_pys"),
-    ]
-    if has_vec:
-        # flattened for the same pyarrow nested-list reason as _pack_cells
-        cols.append(
-            F.flatten(F.transform("_recs", lambda r: r["_vec"])).alias("_pvecs")
-        )
-    return packed.select(*cols)
-
-
-def _unpack_probes(probe_pdf) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, record matrix) for a kernel group's probe side — packed
-    (_pids/_pxs/_pys[/_pvecs]) or plain rows."""
-    if "_pids" in probe_pdf.columns:
-        ids = np.concatenate([np.asarray(a) for a in probe_pdf["_pids"]])
-        if "_pvecs" in probe_pdf.columns:
-            P = np.vstack(
-                [
-                    np.asarray(flat, np.float64).reshape(len(cell_ids), -1)
-                    for cell_ids, flat in zip(probe_pdf["_pids"], probe_pdf["_pvecs"])
-                ]
-            )
-        else:
-            xs = np.concatenate([np.asarray(a, np.float64) for a in probe_pdf["_pxs"]])
-            ys = np.concatenate([np.asarray(a, np.float64) for a in probe_pdf["_pys"]])
-            P = np.column_stack((xs, ys))
-        return ids, P
-    return probe_pdf["_id"].to_numpy(), _group_matrix(probe_pdf)
-
-
-def _ranked_group_topk_arrays(
-    probes_packed: DataFrame,
-    build_halo: DataFrame,
-    metric: Metric,
-    k: int,
-    kernel: str,
-    qid_type: str,
-    bid_type: str,
-) -> DataFrame:
-    """Fast-path kernel, fully columnar: packed probes × packed halo cells
-    cogrouped by (cell, salt); output is ONE ROW PER PROBE carrying its
-    ranked neighbor/distance ARRAYS. Downstream the ring-guarantee verdict
-    reads size/last-element narrowly (no 20M-row aggregate shuffle) and the
-    row-per-rank form is a JVM-side posexplode — Arrow moves |probes| rows,
-    not k·|probes|."""
-    import pandas as pd
-
-    out_schema = (
-        f"query_id {qid_type}, _nids array<{bid_type}>, _dists array<double>"
-    )
-    # object dtype: an empty float64 ndarray routes pyarrow into the
-    # NumPyConverter, which cannot target list<> types
-    empty = pd.DataFrame(
-        {
-            "query_id": pd.Series([], dtype=object),
-            "_nids": pd.Series([], dtype=object),
-            "_dists": pd.Series([], dtype=object),
-        }
-    )
-
-    def fn(key, probe_pdf, build_pdf):
-        if len(probe_pdf) == 0 or len(build_pdf) == 0:
-            return empty
-        raw_ids, raw_B = _unpack_build(build_pdf)
-        order = raw_ids.argsort(kind="stable")
-        bids = raw_ids[order]
-        B = raw_B[order]
-        pids, P = _unpack_probes(probe_pdf)
-        if kernel == "covertree":
-            idx, d = _covertree_topk(metric, P, B, k)
-        else:
-            idx, d = _flat_topk(metric, P, B, k)
-        nid_rows = bids[idx]
-        # .tolist(): plain python scalars — Arrow's NumPyConverter refuses
-        # numpy string scalars inside list values
-        return pd.DataFrame(
-            {
-                "query_id": pids,
-                "_nids": [r.tolist() for r in nid_rows],
-                "_dists": [r.tolist() for r in d],
-            }
-        )
-
-    return (
-        probes_packed.groupBy("_cell", "_salt")
-        .cogroup(build_halo.groupBy("_cell", "_salt"))
-        .applyInPandas(fn, schema=out_schema)
     )
 
 
@@ -404,28 +413,6 @@ def _explode_ranked(packed: DataFrame) -> DataFrame:
         F.col("_z._dists").alias("dist"),
         (F.col("_pos") + 1).cast("int").alias("rank"),
     )
-
-
-def _unpack_build(build_pdf) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, record matrix) for a kernel group's build side — packed
-    (_ids/_xs/_ys[/_vecs] array rows, one per halo cell) or plain rows."""
-    if "_ids" in build_pdf.columns:
-        # ids keep their native dtype (long or string) — tie-break argsort
-        # and the output column both preserve it
-        ids = np.concatenate([np.asarray(a) for a in build_pdf["_ids"]])
-        if "_vecs" in build_pdf.columns:
-            B = np.vstack(
-                [
-                    np.asarray(flat, np.float64).reshape(len(cell_ids), -1)
-                    for cell_ids, flat in zip(build_pdf["_ids"], build_pdf["_vecs"])
-                ]
-            )
-        else:
-            xs = np.concatenate([np.asarray(a, np.float64) for a in build_pdf["_xs"]])
-            ys = np.concatenate([np.asarray(a, np.float64) for a in build_pdf["_ys"]])
-            B = np.column_stack((xs, ys))
-        return ids, B
-    return build_pdf["_id"].to_numpy(), _group_matrix(build_pdf)
 
 
 def _guarantee_col(res: int, ring_k: Column | int) -> Column:
@@ -449,51 +436,6 @@ def _guarantee_col(res: int, ring_k: Column | int) -> Column:
     return F.least(mx_lo, mx_hi, my_lo, my_hi)
 
 
-def _ranked_group_topk(
-    probes_s: DataFrame,
-    build_halo: DataFrame,
-    metric: Metric,
-    k: int,
-    kernel: str,
-    qid_type: str,
-    bid_type: str,
-) -> DataFrame:
-    """Fast-path kernel: cogroup by (cell, salt); each probe's candidates are
-    complete within its group, so the kernel emits final ranked rows."""
-    import pandas as pd
-
-    out_schema = f"query_id {qid_type}, neighbor_id {bid_type}, dist double, rank int"
-    empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "dist": [], "rank": []})
-
-    def fn(key, probe_pdf, build_pdf):
-        if len(probe_pdf) == 0 or len(build_pdf) == 0:
-            return empty
-        raw_ids, raw_B = _unpack_build(build_pdf)
-        order = raw_ids.argsort(kind="stable")
-        bids = raw_ids[order]
-        B = raw_B[order]
-        P = _group_matrix(probe_pdf)
-        if kernel == "covertree":
-            idx, d = _covertree_topk(metric, P, B, k)
-        else:
-            idx, d = _flat_topk(metric, P, B, k)
-        kk = idx.shape[1]
-        return pd.DataFrame(
-            {
-                "query_id": probe_pdf["_id"].to_numpy().repeat(kk),
-                "neighbor_id": bids[idx.ravel()],
-                "dist": d.ravel(),
-                "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), len(P)),
-            }
-        )
-
-    return (
-        probes_s.groupBy("_cell", "_salt")
-        .cogroup(build_halo.groupBy("_cell", "_salt"))
-        .applyInPandas(fn, schema=out_schema)
-    )
-
-
 def _expand_probes(
     probes_c: DataFrame,
     salts: DataFrame,
@@ -506,15 +448,15 @@ def _expand_probes(
     covers the whole grid, cross-join against the build side's distinct
     occupied cells instead of enumerating the (2k+1)² offset square."""
     # payload = whatever _prepare shipped (_vec for full-dim metrics, _x/_y
-    # for the 2-D fast path) — the kernel's _group_matrix falls back to
-    # (_x, _y) when _vec is absent, so the escalation path must keep them
+    # for the 2-D fast path) — the kernel's _matrix falls back to (_x, _y)
+    # when _vec is absent, so the escalation path must keep them
     payload = _payload_cols(probes_c)
     if build_cells is not None and ring_k >= (1 << res):
         cand = probes_c.select(*payload).crossJoin(F.broadcast(build_cells))
     else:
         cand = probes_c.select(
             *payload,
-            F.explode(kring_cells_col(F.col("_cell"), res, ring_k)).alias("_cell"),
+            F.explode(_kring_col(res, ring_k)).alias("_cell"),
         )
     cand = cand.join(F.broadcast(salts), "_cell", "left")
     return cand.select(
@@ -526,59 +468,14 @@ def _expand_probes(
     )
 
 
-def _partial_topk(
-    probe_cand: DataFrame,
-    build_salted: DataFrame,
-    metric: Metric,
-    k: int,
-    kernel: str,
-    qid_type: str,
-    bid_type: str,
-) -> DataFrame:
-    """Escalation-path kernel: per-(cell, salt) partial top-k rows
-    (≤ k per probe per group); merged by the caller's window."""
-    import pandas as pd
-
-    out_schema = f"query_id {qid_type}, neighbor_id {bid_type}, dist double"
-    empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "dist": []})
-
-    def fn(key, probe_pdf, build_pdf):
-        if len(probe_pdf) == 0 or len(build_pdf) == 0:
-            return empty
-        raw_ids, raw_B = _unpack_build(build_pdf)
-        order = raw_ids.argsort(kind="stable")
-        bids = raw_ids[order]
-        B = raw_B[order]
-        P = _group_matrix(probe_pdf)
-        if kernel == "covertree":
-            idx, d = _covertree_topk(metric, P, B, k)
-        else:
-            idx, d = _flat_topk(metric, P, B, k)
-        kk = idx.shape[1]
-        return pd.DataFrame(
-            {
-                "query_id": probe_pdf["_id"].to_numpy().repeat(kk),
-                "neighbor_id": bids[idx.ravel()],
-                "dist": d.ravel(),
-            }
-        )
-
-    return (
-        probe_cand.groupBy("_cell", "_salt")
-        .cogroup(build_salted.groupBy("_cell", "_salt"))
-        .applyInPandas(fn, schema=out_schema)
-    )
-
-
 def _grid_knn(
     probes_c: DataFrame,
     build_c: DataFrame,
     n_build: int,
     metric: Metric,
     k: int,
-    kernel: str,
-    qid_type: str,
-    bid_type: str,
+    qid_type: DataType,
+    bid_type: DataType,
     chunk_rows: int,
     stats: KnnJoinStats,
 ) -> DataFrame:
@@ -619,14 +516,15 @@ def _grid_knn(
     stats.rounds.append(
         {"plan": "grid", "bparts": bparts, "pparts": pparts, "exhaustive": True}
     )
+    select = _topk(metric, k)
     if bparts == 1:
         # every probe sees the whole build side in its single group — the
         # kernel's ranked output is final, no window
-        return _ranked_group_topk(
-            probes_g, build_g, metric, k, kernel, qid_type, bid_type
+        return _explode_ranked(
+            _cogroup_kernel(probes_g, build_g, select, qid_type, bid_type, ranked=True)
         )
-    partial = _partial_topk(
-        probes_g, build_g, metric, k, kernel, qid_type, bid_type
+    partial = _cogroup_kernel(
+        probes_g, build_g, select, qid_type, bid_type, ranked=False
     )
     w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
     return partial.withColumn("rank", F.row_number().over(w)).where(
@@ -648,7 +546,6 @@ def knn_join(
     res: int | None = None,
     target_per_cell: int = 256,
     salt_threshold: int | None = None,
-    kernel: str = "flat",
     coord_scale: float = 1.0,
     max_rounds: int = 12,
     grid_chunk_rows: int = 8192,
@@ -684,16 +581,23 @@ def knn_join(
     stats.n_build = n_build
     stats.resolution = res
 
-    qid_type = probes.schema[probe_id_col or id_col].dataType.simpleString()
-    bid_type = build.schema[id_col].dataType.simpleString()
+    pid_col = probe_id_col or id_col
+    qid_type = probes.schema[pid_col].dataType
+    bid_type = build.schema[id_col].dataType
 
     build_c = _prepare(build, id_col, vec_col, x_col, y_col, res).persist()
-    probes_c = _prepare(
-        probes, probe_id_col or id_col, vec_col, x_col, y_col, res
-    ).persist()
-    to_unpersist: list[DataFrame] = [build_c, probes_c]
+    to_unpersist: list[DataFrame] = [build_c]
+    if probes is build and pid_col == id_col:
+        # self-join: one prepared, persisted side serves as both; the
+        # re-aliased projection only gives the probe side its own column
+        # ids, so the cogroups never see the same attribute on both sides
+        probes_c = build_c.select(*[F.col(c).alias(c) for c in build_c.columns])
+    else:
+        probes_c = _prepare(probes, pid_col, vec_col, x_col, y_col, res).persist()
+        to_unpersist.append(probes_c)
     done_parts: list[DataFrame] = []
     grid_n = 1 << res
+    select = _topk(metric, k)
     try:
         if grid_n == 1:
             # res 0: the 2-D index cannot prune — bounded block-grid brute
@@ -704,7 +608,6 @@ def knn_join(
                 n_build,
                 metric,
                 k,
-                kernel,
                 qid_type,
                 bid_type,
                 grid_chunk_rows,
@@ -715,57 +618,34 @@ def knn_join(
         # ---- round 1: halo fast path over the full probe set -------------
         # fully columnar: both cogroup sides are packed per cell (thousands
         # of array rows through the shuffle sort, not millions of records),
-        # the kernel returns per-probe ranked ARRAYS, the verdict reads them
-        # narrowly, and rows-per-rank appear only via a JVM-side posexplode
+        # the kernel returns per-probe ranked ARRAYS plus the ring-1 verdict
+        # _ok, and rows-per-rank appear only via a JVM-side posexplode
         salts_p = _salts_for(probes_c, salt_threshold)
-        probes_s = _with_salt(probes_c, salts_p)
-        probes_p = _pack_probes(probes_s)
+        probes_p = _pack(_with_salt(probes_c, salts_p), "_cell", "_salt")
         halo = _halo_build_packed(build_c, salts_p, res, 1)
-        packed = _ranked_group_topk_arrays(
-            probes_p, halo, metric, k, kernel, qid_type, bid_type
+        packed = _cogroup_kernel(
+            probes_p,
+            halo,
+            select,
+            qid_type,
+            bid_type,
+            ranked=True,
+            verdict=(res, coord_scale, min(k, max(n_build, 1))),
         ).persist()
         to_unpersist.append(packed)
         ranked = _explode_ranked(packed)
-
-        per_probe = packed.select(
-            "query_id",
-            F.size("_nids").cast("long").alias("cnt"),
-            F.element_at("_dists", F.size("_dists")).alias("kth"),
-        )
-        probe_geo = probes_c.select(
-            F.col("_id").alias("query_id"), "_x", "_y"
-        ).withColumn("guar", _guarantee_col(res, 1) * F.lit(coord_scale))
-        verdict = probe_geo.join(per_probe, "query_id", "left").select(
-            "query_id",
-            (
-                (
-                    F.coalesce(F.col("cnt"), F.lit(0))
-                    >= F.lit(min(k, max(n_build, 1)))
-                )
-                & (F.col("kth") < F.col("guar"))
-            ).alias("ok"),
-        )
-        unresolved_ids = (
-            verdict.where(~F.coalesce(F.col("ok"), F.lit(False)))
-            .select(F.col("query_id").alias("_id"))
-            .persist()
-        )
-        to_unpersist.append(unresolved_ids)
-        n_unres = unresolved_ids.count()
+        n_unres = packed.where(~F.col("_ok")).count()
         stats.rounds.append({"ring_k": 1, "unresolved": n_unres})
         if n_unres == 0:
             done_parts.append(ranked)
             unresolved = None
         else:
-            done_parts.append(
-                ranked.join(
-                    unresolved_ids.select(F.col("_id").alias("query_id")),
-                    "query_id",
-                    "left_anti",
-                )
+            done_parts.append(_explode_ranked(packed.where(F.col("_ok"))))
+            unresolved = probes_c.join(
+                packed.where(~F.col("_ok")).select(F.col("query_id").alias("_id")),
+                "_id",
+                "left_semi",
             )
-            unresolved = probes_c.join(unresolved_ids, "_id", "left_semi")
-
 
         # ---- escalation rounds: probe-expansion scheme, work ∝ unresolved
         if unresolved is not None:
@@ -786,8 +666,8 @@ def knn_join(
                     grid_n if exhaustive else ring_k,
                     build_cells,
                 )
-                partial = _partial_topk(
-                    cand, build_salted, metric, k, kernel, qid_type, bid_type
+                partial = _cogroup_kernel(
+                    cand, build_salted, select, qid_type, bid_type, ranked=False
                 )
                 topk = (
                     partial.withColumn("rank", F.row_number().over(w))
@@ -898,8 +778,8 @@ def range_join(
     norm_r = radius / coord_scale
     ring_k = min(1 << res, int(math.ceil(norm_r / cell_size(res))))
 
-    qid_type = probes.schema[probe_id_col or id_col].dataType.simpleString()
-    bid_type = build.schema[id_col].dataType.simpleString()
+    qid_type = probes.schema[probe_id_col or id_col].dataType
+    bid_type = build.schema[id_col].dataType
 
     build_c = _prepare(build, id_col, vec_col, x_col, y_col, res)
     probes_c = _prepare(
@@ -910,32 +790,13 @@ def range_join(
     # packed halo matters even more here: the ring is ⌈r/cell⌉ wide, so raw
     # replication would shuffle |build|·(2k+1)² rows
     halo = _halo_build_packed(build_c, salts_p, res, ring_k)
-
-    import pandas as pd
-
-    out_schema = f"query_id {qid_type}, neighbor_id {bid_type}, dist double"
-    empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "dist": []})
-
-    def fn(key, probe_pdf, build_pdf):
-        if len(probe_pdf) == 0 or len(build_pdf) == 0:
-            return empty
-        bids, B = _unpack_build(build_pdf)
-        P = _group_matrix(probe_pdf)
-        D = metric.cross(P, B)
-        mask = (D <= radius) if inclusive else (D < radius)
-        pi, bi = np.nonzero(mask)
-        return pd.DataFrame(
-            {
-                "query_id": probe_pdf["_id"].to_numpy()[pi],
-                "neighbor_id": bids[bi],
-                "dist": D[pi, bi],
-            }
-        )
-
-    out = (
-        probes_s.groupBy("_cell", "_salt")
-        .cogroup(halo.groupBy("_cell", "_salt"))
-        .applyInPandas(fn, schema=out_schema)
+    out = _cogroup_kernel(
+        probes_s,
+        halo,
+        _within(metric, radius, inclusive),
+        qid_type,
+        bid_type,
+        ranked=False,
     )
     # release handle for the internal probes cache (the knn_join convention:
     # getattr(out, "_msk_backing", out).unpersist() when done)

@@ -12,7 +12,10 @@ from metric_search_spark.core.covertree import (
     CoverTree,
     UnsortedDistributionError,
 )
+from metric_search_spark.cells import coords_from_phash
 from metric_search_spark.core.metrics import AbsDiff, Euclidean
+from metric_search_spark.operators.joins import _flat_topk
+from metric_search_spark.sources.synth import lite_rows_for_ids
 
 INTS7 = [3, 5, -10, 50, 1, -200, 200]
 
@@ -92,6 +95,26 @@ class TestSearch:
             got = sorted(d for _, d in t.rnn(p, radius=5.0, prune="safe"))
             brute = np.linalg.norm(pts - p, axis=1)
             assert np.allclose(got, np.sort(brute[brute < 5.0]))
+
+
+class TestJoinKernelParity:
+    def test_flat_kernel_matches_tree_knn(self):
+        """The join's flat top-k kernel and the cover tree's knn agree on the
+        image-coordinate fixture: same neighbors in the same order, same
+        distances (build rows sorted by id, so a node handle is an id rank)."""
+        pdf = lite_rows_for_ids(np.arange(200), seed=42)
+        x, y = coords_from_phash(pdf["phash"].to_numpy())
+        ids = pdf["image_id"].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids, B = ids[order], np.column_stack((x, y))[order]
+        P = np.column_stack((x, y))[:30]
+        idx, dist = _flat_topk(Euclidean(), P, B, 4)
+        t = CoverTree(Euclidean())
+        t.insert_batch(list(B))
+        for i, p in enumerate(P):
+            res = t.knn(p, k=4, prune="safe")
+            assert [ids[n] for n, _ in res] == list(ids[idx[i]]), i
+            np.testing.assert_allclose([d for _, d in res], dist[i], atol=1e-9)
 
 
 class TestErase:

@@ -10,7 +10,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from metric_search_spark.cells import coords_from_phash
+from metric_search_spark.cells import coords_from_phash, ring_guarantee_radius
+from metric_search_spark.core.metrics import Euclidean
 from metric_search_spark.operators.joins import KnnJoinStats, knn_join, range_join
 from metric_search_spark.sources.synth import lite_rows_for_ids
 
@@ -48,6 +49,37 @@ def _brute_knn(P, B, pids, bids, k):
     return out
 
 
+def _brute_ranked(P, B, bids, k):
+    """Exact oracle with the kernel's own distance arithmetic: each probe's
+    k nearest as [(id, dist)], ordered by (dist, id) — bit-comparable."""
+    D = Euclidean().cross(P, B)
+    bids = np.asarray(bids)
+    return [
+        [(bids[j], d[j]) for j in np.lexsort((bids, d))[:k]] for d in D
+    ]
+
+
+def _ring1_unresolved(P, B, k, res, coord_scale=1.0):
+    """Driver-side twin of the kernel's ring-1 verdict: a probe stays
+    unresolved unless its brute-force kth distance is below the ring-1
+    guarantee radius of its clamped coordinates × coord_scale."""
+    kth = np.sort(Euclidean().cross(P, B), axis=1)[:, min(k, len(B)) - 1]
+    c = np.clip(P, 0.0, 1.0 - 2.0**-31)
+    guar = ring_guarantee_radius(c[:, 0], c[:, 1], res, 1) * coord_scale
+    return int((kth >= guar).sum())
+
+
+def _assert_ranked(out, P, B, pids, bids, k):
+    """The knn_join output equals brute force bit for bit."""
+    want = _brute_ranked(P, B, bids, k)
+    got = out.sort_values(["query_id", "rank"]).groupby("query_id")
+    assert len(got) == len(pids)
+    for qid, w in zip(pids, want):
+        grp = got.get_group(qid)
+        assert list(grp["rank"]) == list(range(1, len(w) + 1)), qid
+        assert list(zip(grp["neighbor_id"], grp["dist"])) == w, qid
+
+
 def test_knn_join_matches_bruteforce(spark):
     tbl, build, probes = _image_probe_frames(spark)
     stats = KnnJoinStats()
@@ -64,17 +96,6 @@ def test_knn_join_matches_bruteforce(spark):
         np.testing.assert_allclose(
             [g[1] for g in got], [w[1] for w in want], atol=1e-9
         )
-
-
-def test_knn_join_covertree_kernel_same_result(spark):
-    tbl, build, probes = _image_probe_frames(spark, n=200, n_probes=30)
-    flat = knn_join(probes, build, k=4, res=2, kernel="flat").toPandas()
-    ct = knn_join(probes, build, k=4, res=2, kernel="covertree").toPandas()
-    key = ["query_id", "rank"]
-    flat = flat.sort_values(key).reset_index(drop=True)
-    ct = ct.sort_values(key).reset_index(drop=True)
-    assert (flat["neighbor_id"] == ct["neighbor_id"]).all()
-    np.testing.assert_allclose(flat["dist"], ct["dist"], atol=1e-9)
 
 
 def test_knn_join_salting_exact(spark):
@@ -162,6 +183,7 @@ def test_knn_join_escalation_2d_fast_path(spark):
     assert len(out) == 31 * 5
     assert any(r.get("unresolved", 0) > 0 for r in stats.rounds), stats.rounds
     P = np.column_stack((xs, ys))
+    assert stats.rounds[0]["unresolved"] == _ring1_unresolved(P, P, 5, 2)
     for qid in range(31):
         d = np.sqrt(((P - P[qid]) ** 2).sum(axis=1))
         want = sorted(range(31), key=lambda j: (d[j], j))[:5]
@@ -212,3 +234,93 @@ def test_range_join_matches_bruteforce(spark):
         for j in np.nonzero(d < r)[0]:  # STRICT <, reference rnn quirk
             want.add((tbl["id"][i], tbl["id"][j]))
     assert got == want
+
+
+def test_knn_join_ring1_verdict_clustered(spark):
+    """Clustered points over a sparse background, with salted hot cells:
+    the in-kernel ring-1 verdict counts exactly the probes whose
+    brute-force kth distance reaches past the ring-1 guarantee, and the
+    escalated answers stay exact."""
+    rng = np.random.default_rng(11)
+    centers = np.array([[0.3, 0.3], [0.7, 0.6], [0.45, 0.8]])
+    P = np.vstack(
+        [c + 0.01 * rng.normal(size=(80, 2)) for c in centers]
+        + [rng.random((40, 2))]
+    )
+    ids = np.arange(len(P))
+    df = spark.createDataFrame(pd.DataFrame({"id": ids, "x": P[:, 0], "y": P[:, 1]}))
+    stats = KnnJoinStats()
+    out = knn_join(
+        df, df, k=5, vec_col=None, res=3, salt_threshold=32, stats=stats
+    ).toPandas()
+    n_unres = stats.rounds[0]["unresolved"]
+    assert n_unres > 0 and len(stats.rounds) >= 2, stats.rounds
+    assert n_unres == _ring1_unresolved(P, P, 5, 3)
+    _assert_ranked(out, P, P, ids, ids, 5)
+
+
+def test_knn_join_probes_with_empty_halo(spark):
+    """Probes whose ring-1 halo holds no build rows come back from the
+    kernel with empty arrays and a failed verdict, so they escalate and
+    still get exact answers."""
+    rng = np.random.default_rng(3)
+    B = 0.8 + 0.15 * rng.random((60, 2))
+    P = 0.02 + 0.18 * rng.random((10, 2))
+    build = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(60), "x": B[:, 0], "y": B[:, 1]})
+    )
+    pids = np.arange(1000, 1010)
+    probes = spark.createDataFrame(
+        pd.DataFrame({"id": pids, "x": P[:, 0], "y": P[:, 1]})
+    )
+    stats = KnnJoinStats()
+    out = knn_join(probes, build, k=4, vec_col=None, res=3, stats=stats).toPandas()
+    assert stats.rounds[0]["unresolved"] == 10
+    _assert_ranked(out, P, B, pids, np.arange(60), 4)
+
+
+@pytest.mark.parametrize(
+    "id_type,large_var_types", [("int", False), ("string", False), ("string", True)]
+)
+def test_join_id_types_round_trip(spark, id_type, large_var_types):
+    """32-bit and string ids keep their Spark types through the Arrow
+    kernels of both joins, and the answers stay exact — also when Spark
+    ships strings to the kernel as large_string."""
+    from pyspark.sql.types import IntegerType, StringType
+
+    rng = np.random.default_rng(5)
+    n = 150
+    P = rng.random((n, 2))
+    df = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(n), "x": P[:, 0], "y": P[:, 1]})
+    ).withColumn("id", F.col("id").cast(id_type))
+    spark_type = IntegerType() if id_type == "int" else StringType()
+    ids = np.arange(n) if id_type == "int" else np.array([str(i) for i in range(n)])
+    conf = "spark.sql.execution.arrow.useLargeVarTypes"
+    spark.conf.set(conf, str(large_var_types).lower())
+    try:
+        knn = knn_join(df, df, k=3, vec_col=None, res=2)
+        rj = range_join(df, df, 0.1, vec_col=None, res=2)
+        knn_rows, got = knn.toPandas(), {tuple(r) for r in rj.collect()}
+    finally:
+        spark.conf.unset(conf)
+    for out in (knn, rj):
+        assert out.schema["query_id"].dataType == spark_type
+        assert out.schema["neighbor_id"].dataType == spark_type
+    _assert_ranked(knn_rows, P, P, ids, ids, 3)
+    D = Euclidean().cross(P, P)
+    qi, bi = np.nonzero(D < 0.1)
+    assert got == {(ids[q], ids[b], D[q, b]) for q, b in zip(qi, bi)}
+
+
+def test_knn_join_packed_vec_bit_identical(spark):
+    """The packed vec_col path (nested list<struct<..., list<double>>> cogroup
+    input, res > 0) ranks by the vectors, not the index coordinates, and
+    matches brute force bit for bit."""
+    tbl, _, _ = _image_probe_frames(spark, n=300)
+    V = 2.0 * np.asarray(list(tbl["vec"]), dtype=np.float64)
+    tbl = tbl.assign(vec=[list(v) for v in V])
+    build = spark.createDataFrame(tbl)
+    probes = spark.createDataFrame(tbl.iloc[:50])
+    out = knn_join(probes, build, k=6, res=3, coord_scale=2.0).toPandas()
+    _assert_ranked(out, V[:50], V, list(tbl["id"][:50]), tbl["id"].to_numpy(), 6)
